@@ -32,6 +32,7 @@ from gdutils_spark.operators.summaries import (
     entity_summaries,
 )
 from gdutils_spark.sinks.geojson import track_geojson, track_geojson_dict
+from gdutils_spark.sources.erddap import search_catalog
 
 VALID_SEARCH_KWARGS = {
     # /root/reference/gdutils/__init__.py:59-69
@@ -84,24 +85,6 @@ class GdacClient:
         self._selected_profiles: DataFrame | None = None
         self._last_search: dict | None = None
 
-    def _search_catalog(self, params: dict) -> DataFrame:
-        """Live Advanced-Search catalog scan (the reference's
-        ``get_search_url`` + ``pd.read_csv`` at ``__init__.py:474-521``):
-        the ERDDAP server evaluates searchFor/bbox/time against dataset
-        extents; only matching catalog rows come back."""
-        from gdutils_spark.sources.erddap import register
-
-        register(self._spark)
-        reader = (
-            self._spark.read.format("erddap")
-            .option("mode", "search")
-            .option("server", self._server)
-            .option("items_per_page", str(self._items_per_page))
-        )
-        for k, v in params.items():
-            reader = reader.option(k, str(v))
-        return reader.load()
-
     # -- search -------------------------------------------------------------
 
     def search_datasets(
@@ -114,7 +97,8 @@ class GdacClient:
 
         Filters are plain Catalyst predicates — free text over
         title/summary/institution, time/bbox bounds against per-dataset
-        extent — and the result stays lazy.
+        extent — and the result stays lazy. A server-backed client
+        fetches the catalog-sized Advanced-Search result here, once.
         """
         params = dict(params or {})
         unknown = set(params) - VALID_SEARCH_KWARGS
@@ -127,7 +111,9 @@ class GdacClient:
         # on an already-filtered result, but they keep the local-catalog
         # and live paths semantically identical)
         catalog = (
-            self._search_catalog(params) if self._server is not None else self._catalog
+            search_catalog(self._spark, self._server, params, self._items_per_page)
+            if self._server is not None
+            else self._catalog
         )
         info = catalog.where(F.col("dataset_id") != "allDatasets")
         if not include_delayed_mode:

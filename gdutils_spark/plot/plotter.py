@@ -128,19 +128,13 @@ class ErddapPlotter:
         return self._catalog
 
     def fetch_erddap_datasets(self, spark) -> DataFrame:
-        """Load the server's dataset catalog through the Advanced-Search
-        source (reference ``plotter.py:240-260`` does a blocking
-        ``pd.read_csv`` of the same endpoint). The result is the lazy
+        """Load the server's dataset catalog with an unconstrained
+        Advanced Search (reference ``plotter.py:240-260`` does the same
+        blocking ``pd.read_csv`` of that endpoint). The result is the
         catalog used by :meth:`dataset_exists`."""
-        from gdutils_spark.sources.erddap import register
+        from gdutils_spark.sources.erddap import search_catalog
 
-        register(spark)
-        self._catalog = (
-            spark.read.format("erddap")
-            .option("mode", "search")
-            .option("server", self._server)
-            .load()
-        )
+        self._catalog = search_catalog(spark, self._server)
         return self._catalog
 
     @property

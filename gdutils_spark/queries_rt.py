@@ -1339,13 +1339,13 @@ FROM b
 
 
 # ---------------------------------------------------------------------------
-# S2: live Advanced-Search catalog source (file:// transport)
+# S2: live Advanced-Search catalog fetch (file:// transport)
 # ---------------------------------------------------------------------------
 
 
 def rt_search_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 Advanced-Search catalog source, end-to-end through the
-    ``erddap`` DataSource's file:// transport
+    """S2 Advanced-Search catalog fetch, end-to-end through
+    ``sources.erddap.search_catalog``'s file:// transport
     (/root/reference/gdutils/__init__.py:483,506-527 — ``get_search_url``
     + ``pd.read_csv`` + delayed-mode drop): a deterministic catalog CSV
     derived from ``supplier`` is served as ``{dir}/search/advanced.csv``;

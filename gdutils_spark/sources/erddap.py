@@ -1,4 +1,5 @@
-"""ERDDAP tabledap DataSource with real predicate/projection pushdown.
+"""ERDDAP tabledap DataSource with real predicate/projection pushdown,
+plus the driver-side Advanced-Search catalog fetch.
 
 The reference pushes predicates to ERDDAP by string-building constraint
 URLs per request (``/root/reference/gdutils/__init__.py:770-805`` — the
@@ -20,13 +21,20 @@ parses the SAME constraint query string and applies it with pandas,
 acting as a faithful local stand-in for the server (unit-testable
 pushdown semantics; ERDDAP's units row is skipped like
 ``skiprows=[1]`` at ``gdutils/__init__.py:757``).
+
+Advanced Search is not a scan: it is one catalog-sized request with
+nothing to push down or partition, so :func:`search_catalog` fetches it
+on the driver and hands Spark a small local DataFrame.
 """
 
 from __future__ import annotations
 
+import operator
+import re as _re
 import urllib.parse
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -38,7 +46,7 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 _OPS = {
     EqualTo: "=",
@@ -52,8 +60,8 @@ _OPS = {
 # The reference's flagship entry point: GdacClient.search_datasets builds an
 # ERDDAP Advanced-Search URL via erddapy's get_search_url
 # (/root/reference/gdutils/__init__.py:474-483) and percent-encodes it
-# (:945-951). Same protocol here, engine-side: the URL builder is pure, the
-# fetch happens in a DataSource read (file:// transport for tests).
+# (:945-951). Same protocol here: the URL builder is pure, the fetch is one
+# driver-side request (file:// transport for tests).
 
 #: caller-facing kwargs (erddapy names) → ERDDAP query parameter names
 SEARCH_PARAM_MAP = {
@@ -107,7 +115,7 @@ SEARCH_COLUMNS = (
     "dataset_id",
 )
 
-SEARCH_SCHEMA_DDL = ", ".join(f"{c} string" for c in SEARCH_COLUMNS)
+_SEARCH_SCHEMA = StructType([StructField(c, StringType()) for c in SEARCH_COLUMNS])
 
 
 def advanced_search_url(
@@ -267,35 +275,34 @@ class ErddapReader(DataSourceReader):
             # live ERDDAP: the server evaluates the constraint suffix;
             # units row dropped like the reference's skiprows=[1]
             pdf = pd.read_csv(url, skiprows=[1])
-        integral = {"long", "integer", "short", "byte"}
-        for f in self._schema.fields:
-            if f.name not in pdf.columns:
-                continue
-            if f.dataType.typeName() == "timestamp":
-                # ERDDAP times are UTC; Spark's row converter needs tz-aware
-                pdf[f.name] = pd.to_datetime(pdf[f.name], utc=True)
-            elif (
-                f.dataType.typeName() in integral
-                and pd.api.types.is_float_dtype(pdf[f.name])
-            ):
-                # a gap in an integer column makes pandas read it as
-                # float64 — round-trip through the nullable Int64 dtype
-                # so non-null cells stay INTEGERS (Spark's LongType
-                # converter rejects 3.0) and gaps stay missing
-                pdf[f.name] = pdf[f.name].astype("Int64")
-        cols = [f.name for f in self._schema.fields]
-        # sanitize missing values to None AFTER widening to object:
-        # NaN/NaT aborts the Arrow conversion for non-float types, and a
-        # missing string cell would otherwise be emitted as the literal
-        # 'nan' instead of NULL; the object widening must come FIRST or
-        # float64 columns coerce the None straight back to NaN
-        out = pdf[cols].astype(object)
-        out = out.where(pd.notna(out), None)
-        for row in out.itertuples(index=False, name=None):
-            yield row
+        yield from _arrow_table(pdf, self._schema).to_batches()
 
 
-import re as _re
+def _arrow_table(pdf, schema: StructType):
+    """The pandas frame as an Arrow table in ``schema``'s Spark types.
+
+    ``from_pandas`` turns every NaN/NaT gap into NULL, and the safe cast
+    to the column's Arrow type does the rest: a gappy integer column
+    (read by pandas as float64) comes back as integers, an all-empty
+    column (also float64) as NULLs of its type, so a missing string is
+    never the literal ``'nan'``. Columns absent from ``pdf`` are all
+    NULL. ERDDAP times are UTC."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for field in arrow_schema:
+        if field.name not in pdf.columns:
+            columns.append(pa.nulls(len(pdf), field.type))
+            continue
+        series = pdf[field.name]
+        if pa.types.is_timestamp(field.type):
+            series = pd.to_datetime(series, utc=True)
+        columns.append(pa.array(series, from_pandas=True).cast(field.type))
+    return pa.Table.from_arrays(columns, schema=arrow_schema)
+
 
 #: ERDDAP functional constraint values: max(col)-24hours, min(time)+2days…
 _FUNCTIONAL_RE = _re.compile(
@@ -325,6 +332,18 @@ _UNIT_SECONDS = {
     "years": 365 * 86400.0,
 }
 
+
+#: one tabledap constraint: variable name, comparison operator, value
+_CONSTRAINT_RE = _re.compile(r"^(\w+)(>=|<=|!=|>|<|=)(.*)$")
+
+_COMPARE = {
+    "=": operator.eq,
+    "!=": operator.ne,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "<": operator.lt,
+    "<=": operator.le,
+}
 
 _ISO_TS_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}([T ]|$)")
 
@@ -376,13 +395,10 @@ def _file_transport(url: str, schema: StructType):
     import pandas as pd
 
     parsed = urllib.parse.urlparse(url)
-    path, query = parsed.path.split("?", 1) if "?" in parsed.path else (parsed.path, parsed.query)
-    if not query:
-        query = parsed.query
-    dataset_csv = path.rsplit("/", 1)[-1].replace(".csv", "") + ".csv"
-    base_dir = path.rsplit("/", 2)[0]
+    dataset_csv = parsed.path.rsplit("/", 1)[-1].replace(".csv", "") + ".csv"
+    base_dir = parsed.path.rsplit("/", 2)[0]
     pdf = pd.read_csv(f"{base_dir}/{dataset_csv}")
-    parts = [urllib.parse.unquote(p) for p in query.split("&")]
+    parts = [urllib.parse.unquote(p) for p in parsed.query.split("&")]
     cols = parts[0].split(",")
     want_distinct = False
     for c in parts[1:]:
@@ -392,143 +408,105 @@ def _file_transport(url: str, schema: StructType):
             # in unrequested columns must collapse
             want_distinct = True
             continue
-        for op in (">=", "<=", "!=", ">", "<", "="):
-            if op in c:
-                name, value = c.split(op, 1)
-                series = pdf[name]
-                func = _FUNCTIONAL_RE.match(value)
-                if func is not None:
-                    # evaluate max(col)-offset / min(col)+offset against
-                    # the data, exactly what the ERDDAP server does
-                    value = _eval_functional(pdf, func)
-                    if _is_time_series(series):
-                        series = pd.to_datetime(series, utc=True)
-                    pdf = pdf[
-                        series >= value if op == ">=" else
-                        series <= value if op == "<=" else
-                        series > value if op == ">" else
-                        series < value if op == "<" else
-                        series == value if op == "=" else
-                        series != value
-                    ]
-                    break
-                if len(value) >= 2 and value[0] == '"' and value[-1] == '"':
-                    # the tabledap String-literal form the pushdown now
-                    # emits; compare on the unquoted value
-                    value = value[1:-1]
-                if _is_time_series(series):
-                    # parse the BOUND first: a bound the server would
-                    # accept but we can't parse (or a malformed one)
-                    # must not leave the series half-rebound to
-                    # datetime64 and then raise on a str comparison
-                    try:
-                        bound = pd.to_datetime(value, utc=True)
-                    except (ValueError, TypeError):
-                        pass
-                    else:
-                        series = pd.to_datetime(series, utc=True)
-                        value = bound
-                elif pd.api.types.is_numeric_dtype(series):
-                    # only coerce the bound for numeric columns: a
-                    # digit-like bound against a string column must stay
-                    # a string compare (float vs str raises in pandas)
-                    try:
-                        value = float(value)
-                    except ValueError:
-                        pass
-                pdf = pdf[
-                    series == value if op in ("=",) else
-                    series >= value if op == ">=" else
-                    series <= value if op == "<=" else
-                    series > value if op == ">" else
-                    series < value if op == "<" else
-                    series != value
-                ]
-                break
+        # anchored: the operator is the first one after the variable
+        # name, so a string value containing <, > or = stays whole
+        m = _CONSTRAINT_RE.match(c)
+        if m is None:
+            raise ValueError(f"malformed tabledap constraint: {c!r}")
+        name, op, value = m.groups()
+        series = pdf[name]
+        func = _FUNCTIONAL_RE.match(value)
+        if func is not None:
+            # evaluate max(col)-offset / min(col)+offset against the
+            # data, exactly what the ERDDAP server does
+            value = _eval_functional(pdf, func)
+            if _is_time_series(series):
+                series = pd.to_datetime(series, utc=True)
+        else:
+            if len(value) >= 2 and value[0] == '"' and value[-1] == '"':
+                # the tabledap String-literal form the pushdown emits;
+                # compare on the unquoted value
+                value = value[1:-1]
+            if _is_time_series(series):
+                # parse the BOUND first: a bound the server would accept
+                # but we can't parse (or a malformed one) must not leave
+                # the series half-rebound to datetime64 and then raise on
+                # a str comparison
+                try:
+                    bound = pd.to_datetime(value, utc=True)
+                except (ValueError, TypeError):
+                    pass
+                else:
+                    series = pd.to_datetime(series, utc=True)
+                    value = bound
+            elif pd.api.types.is_numeric_dtype(series):
+                # only coerce the bound for numeric columns: a digit-like
+                # bound against a string column must stay a string
+                # compare (float vs str raises in pandas)
+                try:
+                    value = float(value)
+                except ValueError:
+                    pass
+        pdf = pdf[_COMPARE[op](series, value)]
     out = pdf[cols]
     if want_distinct:
         out = out.drop_duplicates()
     return out
 
 
-class ErddapSearchReader(DataSourceReader):
-    """Advanced-Search catalog scan: one request, one partition (the
-    result is catalog-sized — thousands of rows, not data-sized). The
-    downstream harvest fans out per-dataset from this row set."""
+def search_catalog(
+    spark, server: str, params: dict | None = None, items_per_page: int = 1000
+) -> DataFrame:
+    """Advanced-Search catalog fetch on the driver (the reference's
+    ``get_search_url`` + ``pd.read_csv``, ``gdutils/__init__.py:474-521``).
 
-    def __init__(self, schema: StructType, options):
-        self._schema = schema
-        self._server = options.get("server", "")
-        self._items_per_page = int(options.get("items_per_page", "1000"))
-        self._page = int(options.get("page", "1"))
-        self._params = {
-            kw: options.get(kw)
-            for kw in SEARCH_PARAM_MAP
-            if options.get(kw) is not None
-        }
+    The result is catalog-sized (thousands of rows, not data-sized) and
+    has nothing to push down or partition, so it is one request here
+    and a local DataFrame of the ``SEARCH_COLUMNS`` strings, headers
+    normalized like the reference. The downstream harvest fans out
+    per-dataset from this row set."""
+    import pandas as pd
 
-    def request_url(self, page: int | None = None) -> str:
-        return advanced_search_url(
-            self._server,
-            self._params,
-            self._items_per_page,
-            self._page if page is None else page,
-        )
+    if server.startswith("file://"):
+        # the file transport evaluates the whole fixture in one go
+        # (it has no page semantics — paging it would loop forever)
+        pdf = _search_file_transport(advanced_search_url(server, params, items_per_page))
+    else:
+        # paginate: a catalog larger than itemsPerPage would otherwise be
+        # silently TRUNCATED to the first page — keep requesting until a
+        # short page arrives. The short-page break is the NORMAL exit;
+        # when the catalog is an exact multiple of itemsPerPage the loop
+        # asks for one page past the end, which a live ERDDAP answers
+        # with an HTTP 404 error document — treat THAT (and only that)
+        # follow-up failure as the empty page it means. Anything else on
+        # a follow-up page (503, connection reset, parse error) is a real
+        # failure: swallowing it would silently TRUNCATE the catalog,
+        # which is worse than failing the search.
+        import urllib.error
 
-    def read(self, partition):
-        import pandas as pd
+        frames = []
+        page = 1
+        while True:
+            try:
+                chunk = pd.read_csv(
+                    advanced_search_url(server, params, items_per_page, page)
+                )
+            except urllib.error.HTTPError as exc:
+                if page != 1 and exc.code == 404:
+                    break  # exhausted pagination, not an error
+                raise
+            frames.append(chunk)
+            if len(chunk) < items_per_page:
+                break
+            page += 1
+        pdf = _normalize_search_headers(pd.concat(frames, ignore_index=True))
+    return spark.createDataFrame(_arrow_table(pdf, _SEARCH_SCHEMA))
 
-        if self._server.startswith("file://"):
-            # the file transport evaluates the whole fixture in one go
-            # (it has no page semantics — paging it would loop forever)
-            pdf = _search_file_transport(self.request_url())
-        else:
-            # paginate: a catalog larger than itemsPerPage would
-            # otherwise be silently TRUNCATED to the first page — keep
-            # requesting until a short page arrives. The short-page
-            # break is the NORMAL exit; when the catalog is an exact
-            # multiple of itemsPerPage the loop asks for one page past
-            # the end, which a live ERDDAP answers with an HTTP 404
-            # error document — treat THAT (and only that) follow-up
-            # failure as the empty page it means. Anything else on a
-            # follow-up page (503, connection reset, parse error) is a
-            # real failure: swallowing it would silently TRUNCATE the
-            # catalog, which is worse than failing the read.
-            import urllib.error
 
-            frames = []
-            page = self._page
-            while True:
-                try:
-                    chunk = pd.read_csv(self.request_url(page))
-                except urllib.error.HTTPError as exc:
-                    if page != self._page and exc.code == 404:
-                        break  # exhausted pagination, not an error
-                    raise
-                frames.append(chunk)
-                if len(chunk) < self._items_per_page:
-                    break
-                page += 1
-            pdf = (
-                pd.concat(frames, ignore_index=True)
-                if len(frames) > 1
-                else frames[0]
-            )
-        pdf = pdf.rename(
-            columns={c: c.replace(" ", "_").lower() for c in pdf.columns}
-        )
-        cols = [f.name for f in self._schema.fields]
-        for c in cols:
-            if c not in pdf.columns:
-                pdf[c] = None
-        # widen to object BEFORE the None replacement: on a float64
-        # column (e.g. an all-empty catalog field read as all-NaN)
-        # where(...) keeps the dtype and coerces None straight back to
-        # NaN, which Spark then stringifies as the literal 'nan'
-        pdf = pdf[cols].astype(object)
-        pdf = pdf.where(pd.notna(pdf), None)
-        for row in pdf.itertuples(index=False, name=None):
-            yield row
+def _normalize_search_headers(pdf):
+    """``Dataset ID`` → ``dataset_id``, like the reference's
+    ``s.replace(' ', '_').lower()``."""
+    return pdf.rename(columns=lambda c: c.replace(" ", "_").lower())
 
 
 def _search_file_transport(url: str):
@@ -541,17 +519,11 @@ def _search_file_transport(url: str):
     import pandas as pd
 
     parsed = urllib.parse.urlparse(url)
-    path, query = (
-        parsed.path.split("?", 1) if "?" in parsed.path else (parsed.path, parsed.query)
-    )
-    if not query:
-        query = parsed.query
-    base_dir = path[: -len("/search/advanced.csv")]
-    pdf = pd.read_csv(f"{base_dir}/search/advanced.csv")
-    pdf = pdf.rename(columns={c: c.replace(" ", "_").lower() for c in pdf.columns})
+    base_dir = parsed.path[: -len("/search/advanced.csv")]
+    pdf = _normalize_search_headers(pd.read_csv(f"{base_dir}/search/advanced.csv"))
     q = dict(
         (k, urllib.parse.unquote_plus(v))
-        for k, v in (p.split("=", 1) for p in query.split("&") if "=" in p)
+        for k, v in (p.split("=", 1) for p in parsed.query.split("&") if "=" in p)
     )
 
     needle = q.get("searchFor", "").lower()
@@ -587,16 +559,9 @@ def _search_file_transport(url: str):
 class ErddapDataSource(DataSource):
     """``spark.read.format("erddap")`` — see module docstring.
 
-    Two modes:
-
-    * default (tabledap): required options ``server``, ``dataset_id``;
-      the schema must be supplied by the caller (ERDDAP's info CSV
-      carries it; live schema inference would cost a blocking metadata
-      request per plan).
-    * ``mode=search``: Advanced-Search catalog scan — schema is the fixed
-      search-result column set, options are the search kwargs
-      (``search_for``, ``min_time``, ``max_time``, ``min_lat``,
-      ``max_lat``, ``min_lon``, ``max_lon``, ``institution``, …).
+    Required options ``server``, ``dataset_id``; the schema must be
+    supplied by the caller (ERDDAP's info CSV carries it; live schema
+    inference would cost a blocking metadata request per plan).
     """
 
     @classmethod
@@ -604,16 +569,12 @@ class ErddapDataSource(DataSource):
         return "erddap"
 
     def schema(self):
-        if self.options.get("mode") == "search":
-            return SEARCH_SCHEMA_DDL
         raise NotImplementedError(
             "erddap source needs an explicit .schema(...) — see the info "
             "CSV (S6) for the dataset's variables"
         )
 
     def reader(self, schema: StructType):
-        if self.options.get("mode") == "search":
-            return ErddapSearchReader(schema, self.options)
         return ErddapReader(schema, self.options)
 
 

@@ -120,6 +120,7 @@ def test_end_to_end_partitioned(spark, served_dir):
 from gdutils_spark.sources.erddap import (  # noqa: E402
     SEARCH_COLUMNS,
     advanced_search_url,
+    search_catalog,
 )
 
 
@@ -186,32 +187,16 @@ def search_dir(tmp_path_factory):
 
 
 def test_search_source_file_transport(spark, search_dir):
-    register(spark)
-    df = (
-        spark.read.format("erddap")
-        .option("mode", "search")
-        .option("server", f"file://{search_dir}")
-        .option("search_for", "ru29")
-        .load()
-    )
+    df = search_catalog(spark, f"file://{search_dir}", {"search_for": "ru29"})
     assert df.columns == list(SEARCH_COLUMNS)
     ids = {r["dataset_id"] for r in df.collect()}
     assert ids == {"ru29-20240101T0000", "ru29-20240101T0000-delayed"}
 
 
 def test_search_source_extent_intersection(spark, search_dir):
-    register(spark)
-
-    def search(**opts):
-        # fresh reader per query: DataFrameReader.option() mutates in place
-        r = (
-            spark.read.format("erddap")
-            .option("mode", "search")
-            .option("server", f"file://{search_dir}")
-        )
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return {row["dataset_id"] for row in r.load().collect()}
+    def search(**params):
+        df = search_catalog(spark, f"file://{search_dir}", params)
+        return {row["dataset_id"] for row in df.collect()}
 
     # time window overlapping only the 2023 arctic deployment
     assert search(
@@ -221,6 +206,22 @@ def test_search_source_extent_intersection(spark, search_dir):
     assert search(min_lat="30", max_lat="45") == {
         "ru29-20240101T0000",
         "ru29-20240101T0000-delayed",
+    }
+
+
+def test_search_empty_column_is_null_not_nan(spark, search_dir):
+    """An Advanced-Search column that is empty on every row (``griddap``
+    here) is read by pandas as all-NaN float64; it must come back as
+    NULL strings, never the literal 'nan'."""
+    rows = search_catalog(spark, f"file://{search_dir}").collect()
+    assert len(rows) == 4
+    assert {r["griddap"] for r in rows} == {None}
+    # a partly-empty column keeps its values and NULLs its gaps
+    assert {r["tabledap"] for r in rows} == {
+        "https://x/tabledap/ru29-1",
+        "https://x/tabledap/ru29-1d",
+        "https://x/tabledap/sg610",
+        None,
     }
 
 
@@ -474,64 +475,79 @@ def test_constraint_tz_aware_normalizes_to_utc():
     assert got == "time>=2024-01-01T00:00:00Z"
 
 
-def test_search_pagination_exact_multiple_tolerates_past_end(monkeypatch):
+def test_search_pagination_exact_multiple_tolerates_past_end(spark, monkeypatch):
     """A catalog row count that is an exact multiple of items_per_page
     makes the paginator request one page past the end; a live server
     answers that with an HTTP error document — it must be treated as
-    the empty page it means, not fail the whole read. A FIRST-page
+    the empty page it means, not fail the whole search. A FIRST-page
     error still raises."""
+    import urllib.error
+    import urllib.parse
+
     import pandas as pd
 
-    from gdutils_spark.sources.erddap import ErddapSearchReader
-
-    search_schema = T.StructType([T.StructField("dataset_id", T.StringType())])
-    from pyspark.sql.datasource import CaseInsensitiveDict
-
-    r = ErddapSearchReader(
-        search_schema,
-        CaseInsensitiveDict(
-            {"server": "https://x/erddap", "items_per_page": "2"}
-        ),
-    )
     pages = {
         1: pd.DataFrame({"Dataset ID": ["a", "b"]}),
         2: pd.DataFrame({"Dataset ID": ["c", "d"]}),  # exact multiple...
     }
 
-    import urllib.error
+    def serve(failing: dict[int, int]):
+        """A fake ``pd.read_csv`` answering each page from ``pages``, or
+        with the HTTP status ``failing`` maps it to."""
 
-    def fake_read_csv(url):
-        import urllib.parse
+        def read_csv(url):
+            q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
+            page = int(q["page"][0])
+            if page in failing:
+                raise urllib.error.HTTPError(url, failing[page], "error", None, None)
+            return pages[page]
 
-        q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
-        page = int(q["page"][0])
-        if page not in pages:  # ...so page 3 is a server 404 document
-            raise urllib.error.HTTPError(url, 404, "Not Found", None, None)
-        return pages[page]
+        return read_csv
 
-    monkeypatch.setattr(pd, "read_csv", fake_read_csv)
-    got = [row[0] for row in r.read(None)]
-    assert got == ["a", "b", "c", "d"]
+    def search():
+        df = search_catalog(spark, "https://x/erddap", items_per_page=2)
+        return [r["dataset_id"] for r in df.collect()]
+
+    # ...so page 3 is a server 404 document
+    monkeypatch.setattr(pd, "read_csv", serve({3: 404}))
+    assert search() == ["a", "b", "c", "d"]
     # first-page failure is a real error, not exhausted pagination
-    r_empty = ErddapSearchReader(
-        search_schema,
-        CaseInsensitiveDict(
-            {"server": "https://x/erddap", "items_per_page": "2", "page": "9"}
-        ),
-    )
+    monkeypatch.setattr(pd, "read_csv", serve({1: 404}))
     with pytest.raises(urllib.error.HTTPError):
-        list(r_empty.read(None))
+        search()
     # a TRANSIENT follow-up failure (503) must raise, not silently
     # truncate the catalog to the pages fetched so far
-    def flaky_read_csv(url):
-        import urllib.parse
-
-        q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
-        page = int(q["page"][0])
-        if page == 2:
-            raise urllib.error.HTTPError(url, 503, "Unavailable", None, None)
-        return pages[page]
-
-    monkeypatch.setattr(pd, "read_csv", flaky_read_csv)
+    monkeypatch.setattr(pd, "read_csv", serve({2: 503}))
     with pytest.raises(urllib.error.HTTPError):
-        list(r.read(None))
+        search()
+
+
+def test_transport_string_value_with_operator_chars(spark, tmp_path):
+    """A pushed string value containing <, > or = stays whole: the
+    constraint's operator is the first one after the variable name, not
+    any operator character found in the value."""
+    register(spark)
+    (tmp_path / "unit_o.csv").write_text(
+        "time,station,profile_id\n"
+        "2024-01-01T00:00:00,a<b,1\n"
+        "2024-01-02T00:00:00,x>=y,2\n"
+        "2024-01-03T00:00:00,c,3\n"
+    )
+    schema = T.StructType(
+        [
+            T.StructField("time", T.TimestampType()),
+            T.StructField("station", T.StringType()),
+            T.StructField("profile_id", T.LongType()),
+        ]
+    )
+    df = (
+        spark.read.format("erddap")
+        .schema(schema)
+        .option("server", f"file://{tmp_path}")
+        .option("dataset_id", "unit_o")
+        .load()
+    )
+    got = df.where(F.col("station") == "a<b").collect()
+    assert [r["profile_id"] for r in got] == [1]
+    got = df.where(F.col("station") == "x>=y").collect()
+    assert [r["profile_id"] for r in got] == [2]
